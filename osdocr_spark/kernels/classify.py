@@ -44,7 +44,7 @@ def _start_end_flags(text: str) -> tuple[bool, bool]:
     return start, end
 
 
-def categorize_blocks(doc: Document, conf: int = 10, override: bool = False,
+def categorize_blocks(doc: Document, conf: int = 10,
                       analysis: dict | None = None) -> dict:
     """Assign a type to every level-2 block in place; returns the analysis
     dict (``categorize_boxes``, ``ocr_tree_analyser.py:1202-1231``).
@@ -59,10 +59,7 @@ def categorize_blocks(doc: Document, conf: int = 10, override: bool = False,
     Exact parity with the sequential loop is pinned by
     ``tests/test_kernels.py::test_categorize_vectorized_matches_loop`` over
     every corpus family, and end-to-end by the five byte-parity gauntlets.
-    ``override=True`` (no production call site) keeps the reference loop:
-    re-typing makes every ``b_type`` read order-dependent."""
-    if override:
-        return _categorize_blocks_loop(doc, conf, override, analysis)
+    Blocks already typed keep their type."""
     if analysis is None:
         analysis = analyze_text(doc, conf=conf)
     normal = analysis.get("normal_text_size", 0)
@@ -154,10 +151,9 @@ def categorize_blocks(doc: Document, conf: int = 10, override: bool = False,
 
 
 def _categorize_blocks_loop(doc: Document, conf: int = 10,
-                            override: bool = False,
                             analysis: dict | None = None) -> dict:
     """The sequential reference decision tree — kept verbatim as the parity
-    baseline for the vectorized path (and the ``override=True`` path)."""
+    baseline for the vectorized path."""
     if analysis is None:
         analysis = analyze_text(doc, conf=conf)
     normal = analysis.get("normal_text_size", 0)
@@ -167,7 +163,7 @@ def _categorize_blocks_loop(doc: Document, conf: int = 10,
     above_tbl = nb.neighbor_tables(doc.b_box, all_idx, kinds=("above",))["above"]
 
     for bi in range(doc.n_blocks()):
-        if doc.b_type[bi] is not None and not override:
+        if doc.b_type[bi] is not None:
             continue
         btype = None
         if doc.block_is_empty(bi, conf=conf, only_text=True):

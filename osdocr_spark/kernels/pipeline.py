@@ -31,7 +31,7 @@ from .emit import article_to_txt, assemble_article, document_text
 from .hocr import parse_hocr
 from .order import graph_isolate_articles, sort_topologic_order, topologic_order_context
 
-__all__ = ["extract_document", "extract_html"]
+__all__ = ["extract_document", "clean_and_extract", "extract_html"]
 
 
 def extract_document(doc: Document, conf: int = 10) -> dict:
@@ -63,23 +63,26 @@ def extract_document(doc: Document, conf: int = 10) -> dict:
     # text is the ' '-joined confident word stream in emission order with
     # hyphen-split words re-joined, so offsets are exact cumulative sums
     # (hyphen merges replicate fix_hifenization's join, attributed to the
-    # block holding the first fragment)
-    emitted: list[int] = []
+    # block holding the first fragment).  A title-less article's literal
+    # 'None' title (article_to_txt) takes a token but belongs to no block.
+    tokens: list[tuple[int | None, str]] = []
     for art, a in zip(articles, assembled):  # reuse: assemble is pure
         title_block = None
-        if a["title"] is not None:
+        emitted: list[int] = []
+        if a["title"] is None:
+            tokens.append((None, "None"))
+        else:
             cands = [b for b in art if doc.b_type[b] == "title"]
             if cands:
                 title_block = max(cands, key=lambda b: doc.block_mean_word_height(b))
                 emitted.append(title_block)
         emitted.extend(b for b in art if b != title_block and doc.b_type[b] != "image")
-    tokens: list[tuple[int, str]] = []
-    for bi in emitted:
-        tokens.extend(
-            (int(doc.b_id[bi]), doc.w_text[i])
-            for i in doc.words_of(bi) if doc.w_conf[i] >= 0 and doc.w_text[i]
-        )
-    merged: list[tuple[int, str]] = []
+        for bi in emitted:
+            tokens.extend(
+                (int(doc.b_id[bi]), doc.w_text[i])
+                for i in doc.words_of(bi) if doc.w_conf[i] >= 0 and doc.w_text[i]
+            )
+    merged: list[tuple[int | None, str]] = []
     i = 0
     n_merges = 0
     while i < len(tokens):
@@ -126,12 +129,16 @@ def extract_document(doc: Document, conf: int = 10) -> dict:
     }
 
 
-def extract_html(url: str, html: bytes, conf: int = 10, clean: bool = False) -> dict:
-    """Stage 1 + 2–6: parse, optionally run the §2.9 fix suite
-    (``kernels.fix.clean_doc`` — the reference's ``clean_ocr`` order), then
-    extract."""
-    doc = parse_hocr(html, url=url)
+def clean_and_extract(doc: Document, conf: int = 10, clean: bool = False) -> dict:
+    """Optionally run the §2.9 fix suite (``kernels.fix.clean_doc`` — the
+    reference's ``clean_ocr`` order), then stages 2–6.  Every document
+    source (hOCR bytes, a generated page, checkpoint JSON) ends here."""
     if clean:
         from .fix import clean_doc
         doc = clean_doc(doc, conf=conf)
     return extract_document(doc, conf=conf)
+
+
+def extract_html(url: str, html: bytes, conf: int = 10, clean: bool = False) -> dict:
+    """Stage 1 + :func:`clean_and_extract` over one hOCR page."""
+    return clean_and_extract(parse_hocr(html, url=url), conf=conf, clean=clean)

@@ -15,16 +15,19 @@ filters on ``url``/``lang`` push down into the parquet scan.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..kernels.classify import categorize_blocks
 from ..kernels.corpus import generate_page
+from ..kernels.doc import Document
 from ..kernels.hocr import parse_hocr
-from ..kernels.pipeline import extract_document, extract_html
+from ..kernels.pipeline import clean_and_extract
+from ..kernels.serialize import from_json, to_json
 
 __all__ = [
     "PAGES_SCHEMA", "EXTRACTED_SCHEMA", "BLOCKS_SCHEMA", "PARSED_SCHEMA",
@@ -108,6 +111,61 @@ def pages_from_documents(documents: DataFrame, noisy: bool = False,
     return documents.select("doc_id", "text", "lang").mapInPandas(gen, PAGES_SCHEMA)
 
 
+def _per_document(df: DataFrame, columns: tuple[str, ...], schema: T.StructType,
+                  rows_of: Callable[..., list[tuple]]) -> DataFrame:
+    """The per-batch protocol of every per-document stage: select
+    ``columns`` (so Catalyst prunes the scan to them), read the task's
+    partition id once, call ``rows_of(partition_id, *row)`` for each input
+    row and pack the tuples it returns (zero or more per document) into a
+    pandas batch of ``schema``.  One Python call per Arrow batch, one
+    ``MapInPandas`` per stage."""
+    names = [f.name for f in schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+        tc = TaskContext.get()
+        pid = tc.partitionId() if tc is not None else -1
+        for pdf in batches:
+            rows = []
+            for row in zip(*(pdf[c] for c in columns)):
+                rows.extend(rows_of(pid, *row))
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*columns).mapInPandas(run, schema)
+
+
+# The document sources: how one input row becomes a parsed Document.
+
+def _page_doc(url: str, html: bytes) -> Document:
+    return parse_hocr(bytes(html), url=url)
+
+
+def _generated_doc(doc_id: int, text: str) -> Document:
+    return parse_hocr(generate_page(int(doc_id), text), url=url_for_doc(int(doc_id)))
+
+
+def _checkpoint_doc(url: str, doc_json: str) -> Document:
+    return from_json(doc_json, url=url)
+
+
+def _extracted_rows(doc_of: Callable[..., Document],
+                    clean: bool = False) -> Callable[..., list[tuple]]:
+    """Per-document function of the ``EXTRACTED_SCHEMA`` stages, which
+    differ only in their document source ``doc_of``."""
+
+    def rows_of(pid: int, *row) -> list[tuple]:
+        r = clean_and_extract(doc_of(*row), clean=clean)
+        return [(
+            r["url"], r["text"], r["raw_text"], r["n_blocks"],
+            r["n_main_blocks"], r["n_articles"], r["n_words"],
+            r["normal_text_size"], r["detected_columns"], r["reading_order"],
+            [{"block_id": b, "start": s, "end": e} for b, s, e in r["spans"]],
+            pid,
+        )]
+
+    return rows_of
+
+
 def extract_pages(pages: DataFrame, clean: bool = False) -> DataFrame:
     """The flagship stage: ``pages`` → ``extracted`` (normalized text +
     byte-parity raw text + spans + layout stats + partition lineage id).
@@ -117,26 +175,8 @@ def extract_pages(pages: DataFrame, clean: bool = False) -> DataFrame:
     Column pruning: selects only ``url, html`` from the input, so Catalyst
     prunes the scan to those columns regardless of the pages schema width.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                r = extract_html(url, bytes(html), clean=clean)
-                rows.append((
-                    r["url"], r["text"], r["raw_text"], r["n_blocks"],
-                    r["n_main_blocks"], r["n_articles"], r["n_words"],
-                    r["normal_text_size"], r["detected_columns"],
-                    r["reading_order"],
-                    [{"block_id": b, "start": s, "end": e} for b, s, e in r["spans"]],
-                    pid,
-                ))
-            yield pd.DataFrame(rows, columns=[f.name for f in EXTRACTED_SCHEMA.fields])
-
-    return pages.select("url", "html").mapInPandas(run, EXTRACTED_SCHEMA)
+    return _per_document(pages, ("url", "html"), EXTRACTED_SCHEMA,
+                         _extracted_rows(_page_doc, clean))
 
 
 def extract_documents_fused(documents: DataFrame) -> DataFrame:
@@ -150,27 +190,8 @@ def extract_documents_fused(documents: DataFrame) -> DataFrame:
     the scaling benchmark measures).  ``extract_pages`` remains the
     general-purpose stage for pre-materialized pages tables.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                url = url_for_doc(int(doc_id))
-                r = extract_html(url, generate_page(int(doc_id), text))
-                rows.append((
-                    r["url"], r["text"], r["raw_text"], r["n_blocks"],
-                    r["n_main_blocks"], r["n_articles"], r["n_words"],
-                    r["normal_text_size"], r["detected_columns"],
-                    r["reading_order"],
-                    [{"block_id": b, "start": s, "end": e} for b, s, e in r["spans"]],
-                    pid,
-                ))
-            yield pd.DataFrame(rows, columns=[f.name for f in EXTRACTED_SCHEMA.fields])
-
-    return documents.select("doc_id", "text").mapInPandas(run, EXTRACTED_SCHEMA)
+    return _per_document(documents, ("doc_id", "text"), EXTRACTED_SCHEMA,
+                         _extracted_rows(_generated_doc))
 
 
 ARTICLES_SCHEMA = T.StructType([
@@ -186,16 +207,11 @@ def articles_from_pages(pages: DataFrame, clean: bool = False) -> DataFrame:
     joined text body), the ``articles`` output table of SURVEY.md §1.5
     (``Article`` assembly, ``article.py:45-139``)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                r = extract_html(url, bytes(html), clean=clean)
-                for idx, title, body in r["article_rows"]:
-                    rows.append((url, idx, title, body))
-            yield pd.DataFrame(rows, columns=[f.name for f in ARTICLES_SCHEMA.fields])
+    def rows_of(pid: int, url: str, html: bytes) -> list[tuple]:
+        r = clean_and_extract(_page_doc(url, html), clean=clean)
+        return [(url, *article) for article in r["article_rows"]]
 
-    return pages.select("url", "html").mapInPandas(run, ARTICLES_SCHEMA)
+    return _per_document(pages, ("url", "html"), ARTICLES_SCHEMA, rows_of)
 
 
 PARSED_SCHEMA = T.StructType([
@@ -212,80 +228,42 @@ def parse_pages(pages: DataFrame) -> DataFrame:
     result JSON (``O/pipeline.py:803-817``); this is its table-shaped analog:
     a resumable ``parsed`` table so a failed downstream stage never re-pays
     the parse."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        from ..kernels.serialize import to_json
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "doc_json": [to_json(parse_hocr(bytes(h), url=u))
-                             for u, h in zip(pdf["url"], pdf["html"])],
-                "partition_id": pid,
-            })
-
-    return pages.select("url", "html").mapInPandas(run, PARSED_SCHEMA)
+    return _per_document(
+        pages, ("url", "html"), PARSED_SCHEMA,
+        lambda pid, url, html: [(url, to_json(_page_doc(url, html)), pid)])
 
 
 def extract_parsed(parsed: DataFrame, clean: bool = False) -> DataFrame:
     """Stages 2–6 over a checkpointed ``parsed`` table: deserialize the JSON
     wire format and run analysis → categorize → boilerplate → order →
     articles → emit.  Same output contract as :func:`extract_pages`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        from ..kernels.serialize import from_json
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            rows = []
-            for url, dj in zip(pdf["url"], pdf["doc_json"]):
-                doc = from_json(dj, url=url)
-                if clean:
-                    from ..kernels.fix import clean_doc
-                    doc = clean_doc(doc)
-                r = extract_document(doc)
-                rows.append((
-                    r["url"], r["text"], r["raw_text"], r["n_blocks"],
-                    r["n_main_blocks"], r["n_articles"], r["n_words"],
-                    r["normal_text_size"], r["detected_columns"],
-                    r["reading_order"],
-                    [{"block_id": b, "start": s, "end": e} for b, s, e in r["spans"]],
-                    pid,
-                ))
-            yield pd.DataFrame(rows, columns=[f.name for f in EXTRACTED_SCHEMA.fields])
-
-    return parsed.select("url", "doc_json").mapInPandas(run, EXTRACTED_SCHEMA)
+    return _per_document(parsed, ("url", "doc_json"), EXTRACTED_SCHEMA,
+                         _extracted_rows(_checkpoint_doc, clean))
 
 
-def blocks_from_pages(pages: DataFrame, categorize: bool = True) -> DataFrame:
+def _block_rows(pid: int, url: str, html: bytes) -> list[tuple]:
+    doc = _page_doc(url, html)
+    if doc.n_blocks():
+        categorize_blocks(doc)
+    rows = []
+    for bi in range(doc.n_blocks()):
+        wi = doc.words_of(bi)
+        keys, _, _ = doc.line_table(bi)
+        l, r, t, b = (int(v) for v in doc.b_box[bi])
+        rows.append((
+            url, int(doc.b_id[bi]),
+            str(doc.b_type[bi]) if doc.b_type[bi] is not None else None,
+            l, r, t, b, int(len(wi)), int(len(keys)),
+            float(doc.w_link[wi].mean()) if len(wi) else 0.0,
+            doc.block_mean_word_height(bi),
+        ))
+    return rows
+
+
+def blocks_from_pages(pages: DataFrame) -> DataFrame:
     """UDTF-shaped parse stage: one page row → N block rows with geometry +
     density features (the ``blocks`` intermediate table of SURVEY.md §1.5)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.classify import categorize_blocks
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                doc = parse_hocr(bytes(html), url=url)
-                if categorize and doc.n_blocks():
-                    categorize_blocks(doc)
-                for bi in range(doc.n_blocks()):
-                    wi = doc.words_of(bi)
-                    keys, _, _ = doc.line_table(bi)
-                    l, r, t, b = (int(v) for v in doc.b_box[bi])
-                    rows.append((
-                        url, int(doc.b_id[bi]),
-                        str(doc.b_type[bi]) if doc.b_type[bi] is not None else None,
-                        l, r, t, b, int(len(wi)), int(len(keys)),
-                        float(doc.w_link[wi].mean()) if len(wi) else 0.0,
-                        doc.block_mean_word_height(bi),
-                    ))
-            yield pd.DataFrame(rows, columns=[f.name for f in BLOCKS_SCHEMA.fields])
-
-    return pages.select("url", "html").mapInPandas(run, BLOCKS_SCHEMA)
+    return _per_document(pages, ("url", "html"), BLOCKS_SCHEMA, _block_rows)
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0,

@@ -134,7 +134,7 @@ def main() -> int:
         all_fails = [f for fl in pool.map(check_doc, rows, chunksize=32) for f in fl]
     dt = time.time() - t0
     print(f"swept {len(rows)} docs x 5 variants in {dt:.1f}s "
-          f"({4 * len(rows) / dt:.0f} extractions/s, {procs} procs)")
+          f"({5 * len(rows) / dt:.0f} extractions/s, {procs} procs)")
     if all_fails:
         print(f"FAIL ({len(all_fails)}):")
         for f in all_fails[:40]:

@@ -269,15 +269,23 @@ def test_aqe_splits_skewed_join(spark):
 def test_hocr_dir_and_json_dir_sources(spark, tmp_path):
     """File-based source connectors (§2.1): a directory of raw .hocr files
     and a directory of reference-format result JSONs both load and extract
-    byte-identically to the in-memory path."""
+    byte-identically to the in-memory path.  And every extracted column
+    but the lineage id is the same whichever document source feeds the
+    stage — html bytes, a page generated from (doc_id, text), or checkpoint
+    JSON — including crossed pages through the checkpoint with the fix
+    suite."""
     import re as _re
     import duckdb
+    from pyspark.sql import functions as F
     from osdocr_spark.kernels.corpus import generate_page
     from osdocr_spark.kernels.hocr import parse_hocr
     from osdocr_spark.kernels.serialize import to_json
     from osdocr_spark.spark.jobs import (load_pages_from_hocr_dir,
                                          load_parsed_from_json_dir)
-    from osdocr_spark.spark.stages import extract_pages, extract_parsed
+    from osdocr_spark.spark.stages import (EXTRACTED_SCHEMA,
+                                           extract_documents_fused,
+                                           extract_pages, extract_parsed,
+                                           pages_from_documents, parse_pages)
 
     rows = duckdb.sql(
         f"select doc_id, text from '{SF}/documents.parquet' "
@@ -308,6 +316,25 @@ def test_hocr_dir_and_json_dir_sources(spark, tmp_path):
     for url, text in got_j.items():
         doc_id = url.rsplit("/", 1)[1].removesuffix(".json")
         assert text == want[doc_id], url
+
+    docs = (spark.read.parquet(f"{SF}/documents.parquet")
+            .where(F.col("doc_id").isin([d for d, _ in rows])))
+    cols = [f.name for f in EXTRACTED_SCHEMA.fields if f.name != "partition_id"]
+
+    def by_url(df):
+        return {r["url"]: r for r in df.select(*cols).collect()}
+
+    pages = pages_from_documents(docs)
+    via_html = by_url(extract_pages(pages))
+    assert len(via_html) == len(rows)
+    assert by_url(extract_documents_fused(docs)) == via_html
+    assert by_url(extract_parsed(parse_pages(pages))) == via_html
+
+    crossed = pages_from_documents(docs, noisy=True, adversarial=True,
+                                   multi_article=True)
+    via_html = by_url(extract_pages(crossed, clean=True))
+    assert len(via_html) == len(rows)
+    assert by_url(extract_parsed(parse_pages(crossed), clean=True)) == via_html
 
 
 def test_corpus_respects_oracle_bounds():

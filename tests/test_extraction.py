@@ -117,6 +117,39 @@ def test_adversarial_byte_parity(docs):
         assert got == re.sub(r"\s+", " ", text).strip(), f"doc {doc_id}"
 
 
+def test_title_less_article_spans():
+    """A title-less article emits the literal 'None' title (the reference's
+    ``to_txt`` quirk, kept in the bytes); each block's span must still
+    slice exactly that block's emitted words."""
+    def word(txt, x):
+        return ("<span class='ocrx_word' id='w' "
+                f"title='bbox {x} 10 {x + 50} 30; x_wconf 90'>{txt}</span>")
+
+    page = ("<div class='ocr_carea' id='b' title='bbox 0 0 500 40'>"
+            + word("one", 10) + word("two", 70) + "</div>")
+    r = extract_html("one-block", page.encode())
+    assert r["text"] == "None one two"
+    assert [r["text"][s:e] for _, s, e in r["spans"]] == ["one two"]
+
+
+def test_generator_clamps_width_for_overlong_words():
+    """A headline or caption word wider than its column must not zero the
+    per-character width the generator divides by."""
+    from osdocr_spark.kernels.corpus import generate_page_adversarial
+    from osdocr_spark.kernels.hocr import parse_hocr
+
+    long = "x" * 1200
+    words = [f"w{i}" for i in range(60)]
+    # doc 1: figure family, the last 3 body words are the caption
+    caption = " ".join(words[:20] + [long] + words[20:22])
+    # doc 0: ragged family, 2 columns, the headline is column 1's first words
+    headline = " ".join(words[:30] + [long] * 3 + words[33:])
+    for doc_id, text, kw in ((1, caption, {}),
+                             (0, headline, {"multi_article": True})):
+        doc = parse_hocr(generate_page_adversarial(doc_id, text, **kw))
+        assert long in list(doc.w_text), doc_id
+
+
 def _order_and_types(doc_id, text):
     from osdocr_spark.kernels.classify import boilerplate_mask, categorize_blocks
     from osdocr_spark.kernels.hocr import parse_hocr
