@@ -9,6 +9,15 @@ list* form of the flat document (each operator is a deterministic sequential
 algorithm over tens of blocks per document — exactly the reference's cost
 shape, run in-kernel per Arrow batch).
 
+In :func:`clean_doc`, the rules that read one block at a time —
+remove_nodes_conf, remove_empty_boxes, delimiter typing and
+text_bound_box_fix — run as whole-document masks on the columnar
+:class:`Document` (:func:`_masked_rules`), and only the surviving blocks
+and words become MBlocks.  The order-dependent operators
+(split_whitespaces, delimiters_fix, block_bound_box_fix) and the other
+operators here work on MBlocks.  The MBlock forms of the four masked rules
+are the test oracle (``tests/fix_oracle.py``).
+
 Documented deviations (clean implementations of intended semantics):
 
 - ``remove_empty_boxes`` pops while iterating in the reference
@@ -35,7 +44,6 @@ from .doc import Document
 
 __all__ = [
     "MWord", "MBlock", "to_mutable", "to_document",
-    "remove_nodes_conf", "remove_empty_boxes", "text_bound_box_fix",
     "block_bound_box_fix", "split_block", "split_whitespaces",
     "delimiters_fix", "unite_blocks", "remove_solo_words", "find_text_titles",
     "join_blocks", "remove_blocks_inside", "translate_doc", "scale_doc", "prune_children_area",
@@ -109,16 +117,29 @@ class MBlock:
                 min(w.box[2] for w in ws), max(w.box[3] for w in ws)]
 
 
-def to_mutable(doc: Document) -> list[MBlock]:
-    blocks = []
-    for bi in range(doc.n_blocks()):
-        wi = doc.words_of(bi)
-        words = [MWord(list(map(int, doc.w_box[i])), int(doc.w_conf[i]), doc.w_text[i],
-                       int(doc.w_par[i]), int(doc.w_line[i]), bool(doc.w_link[i]))
-                 for i in wi]
-        blocks.append(MBlock(int(doc.b_id[bi]), doc.b_type[bi],
-                             list(map(int, doc.b_box[bi])), words))
-    return blocks
+def to_mutable(doc: Document, b_keep: np.ndarray | None = None,
+               w_keep: np.ndarray | None = None, b_box: np.ndarray | None = None,
+               b_type: np.ndarray | None = None) -> list[MBlock]:
+    """The mutable block list of ``doc``, built from bulk ``.tolist()``
+    columns.  ``b_keep`` / ``w_keep`` (bool masks) restrict it to the
+    surviving blocks and words; ``b_box`` / ``b_type`` replace the block
+    columns.  Words group by block with a stable sort, so each block keeps
+    its words in pre-order whether or not ``w_block`` is sorted."""
+    nb = doc.n_blocks()
+    b_keep = np.ones(nb, bool) if b_keep is None else b_keep
+    b_box = doc.b_box if b_box is None else b_box
+    b_type = doc.b_type if b_type is None else b_type
+    wmask = b_keep[doc.w_block] if w_keep is None else w_keep & b_keep[doc.w_block]
+    wsel = np.nonzero(wmask)[0]
+    wsel = wsel[np.argsort(doc.w_block[wsel], kind="stable")]
+    words = list(map(MWord, doc.w_box[wsel].tolist(), doc.w_conf[wsel].tolist(),
+                     doc.w_text[wsel].tolist(), doc.w_par[wsel].tolist(),
+                     doc.w_line[wsel].tolist(), doc.w_link[wsel].tolist()))
+    bsel = np.nonzero(b_keep)[0]
+    ends = np.cumsum(np.bincount(doc.w_block[wsel], minlength=nb)[bsel]).tolist()
+    return [MBlock(bid, bt, box, words[s:e]) for bid, bt, box, s, e in zip(
+        doc.b_id[bsel].tolist(), b_type[bsel].tolist(), b_box[bsel].tolist(),
+        [0] + ends[:-1], ends)]
 
 
 def to_document(blocks: list[MBlock], url: str) -> Document:
@@ -146,50 +167,6 @@ def to_document(blocks: list[MBlock], url: str) -> Document:
 
 
 # ---------------------------------------------------------------- operators
-
-def remove_nodes_conf(blocks: list[MBlock], conf: int = 10) -> list[MBlock]:
-    """Delete words below the confidence threshold
-    (``OCR_Tree.remove_nodes_conf``, ``ocr_tree.py:1271-1285``)."""
-    for b in blocks:
-        b.words = [w for w in b.words if w.conf >= conf]
-    return blocks
-
-
-def remove_empty_boxes(blocks: list[MBlock], page_box: list, conf: int = 10,
-                       find_delimiters: bool = True, find_images: bool = True) -> list[MBlock]:
-    """Drop empty blocks; always drop empty blocks covering ≥80% of the page
-    area; keep delimiters and (optionally) images
-    (``remove_empty_boxes``, ``ocr_tree_fix.py:17-57``)."""
-    page_area = max((page_box[1] - page_box[0]) * (page_box[3] - page_box[2]), 1)
-    out = []
-    for b in blocks:
-        if b.is_empty(conf=conf, only_text=True):
-            area = (b.box[1] - b.box[0]) * (b.box[3] - b.box[2])
-            if area >= page_area * 0.8:
-                continue
-            if b.aspect_delimiter(conf=conf, only_type=not find_delimiters):
-                out.append(b)
-                continue
-            if not find_images and b.is_image(conf=conf, only_type=True):
-                out.append(b)
-                continue
-            continue
-        out.append(b)
-    return out
-
-
-def text_bound_box_fix(blocks: list[MBlock], conf: int = 10) -> list[MBlock]:
-    """Shrink each text block's box to the hull of its confident words
-    (``text_bound_box_fix``, ``ocr_tree_fix.py:211-256``; only shrinks,
-    never grows)."""
-    for b in blocks:
-        h = b.hull(conf=conf)
-        if h is None:
-            continue
-        b.box = [max(b.box[0], h[0]), min(b.box[1], h[1]),
-                 max(b.box[2], h[2]), min(b.box[3], h[3])]
-    return blocks
-
 
 def join_blocks(a: MBlock, b: MBlock, orientation: str = "vertical") -> MBlock:
     """Merge block ``b`` into ``a`` (``OCR_Tree.join_trees``,
@@ -842,31 +819,63 @@ def scale_doc(doc: Document, fx: float, fy: float) -> Document:
     return doc
 
 
-def clean_doc(doc: Document, conf: int = 10) -> Document:
-    """The reference's cleaning pipeline in normative order
-    (``clean_ocr``, ``O/pipeline.py:708-819``): remove_nodes_conf →
-    remove_empty_boxes → text_bound_box_fix → split_whitespaces →
-    delimiters_fix → block_bound_box_fix.  (The image-space
-    ``bound_box_fix_image`` stage is a no-op for HTML payloads.)"""
-    from .analyzer import analyze_text
-
-    analysis = analyze_text(doc, conf=conf)
-    blocks = to_mutable(doc)
-    if doc.n_blocks():
-        page_box = [int(doc.b_box[:, 0].min()), int(doc.b_box[:, 1].max()),
-                    int(doc.b_box[:, 2].min()), int(doc.b_box[:, 3].max())]
-    else:
-        page_box = [0, 1, 0, 1]
-    blocks = remove_nodes_conf(blocks, conf=conf)
-    blocks = remove_empty_boxes(blocks, page_box, conf=conf)
+def _masked_rules(doc: Document, conf: int) -> list[MBlock]:
+    """remove_nodes_conf → remove_empty_boxes → delimiter typing →
+    text_bound_box_fix as whole-document masks, then one conversion of the
+    surviving blocks and words to MBlocks.  Each of these rules reads one
+    block at a time, so none depends on the order the others run in."""
+    nb = doc.n_blocks()
+    if nb == 0:
+        return []
+    box = doc.b_box
+    # remove_nodes_conf (``ocr_tree.py:1271-1285``)
+    w_ok = doc.w_conf >= conf
+    # remove_empty_boxes (``ocr_tree_fix.py:17-57``): an empty block goes
+    # when it covers ≥80% of the page (taken from the unfiltered blocks),
+    # else stays only when typed delimiter, or not an image and ≥4:1 either way
+    page_area = max((int(box[:, 1].max()) - int(box[:, 0].min()))
+                    * (int(box[:, 3].max()) - int(box[:, 2].min())), 1)
+    wd, ht = box[:, 1] - box[:, 0], box[:, 3] - box[:, 2]
+    aspect = (wd >= ht * 4) | (ht >= wd * 4)
+    types = np.array(doc.b_type, dtype=object)
+    typed = types == "delimiter"
+    empty = ~doc.nonempty_mask(conf)
+    keep = ~empty | ((wd * ht < page_area * 0.8)
+                     & (typed | ((types != "image") & aspect)))
     # type obvious delimiters so delimiters_fix can operate pre-categorize
     # (the reference's pipeline injects typed delimiter nodes before cleaning,
     # ``O/pipeline.py:653-698``; aspect detection is our payload's analog)
-    for b in blocks:
-        if b.type is None and b.aspect_delimiter(conf=conf):
-            b.type = "delimiter"
-    blocks = text_bound_box_fix(blocks, conf=conf)
-    blocks = split_whitespaces(blocks, analysis.get("average_word_distance", 0.0), conf=conf)
+    types[np.equal(types, None) & empty & aspect] = "delimiter"
+    # text_bound_box_fix (``ocr_tree_fix.py:211-256``): shrink, never grow,
+    # to the hull of the confident non-blank words
+    hw = np.nonzero(w_ok & doc.w_nonblank())[0]
+    hb = doc.w_block[hw]
+    lt = np.full((nb, 2), np.iinfo(np.int64).max)
+    rb = np.full((nb, 2), np.iinfo(np.int64).min)
+    np.minimum.at(lt, hb, doc.w_box[hw][:, 0::2])
+    np.maximum.at(rb, hb, doc.w_box[hw][:, 1::2])
+    has = (np.bincount(hb, minlength=nb) > 0)[:, None]
+    box = box.copy()
+    box[:, 0::2] = np.where(has, np.maximum(box[:, 0::2], lt), box[:, 0::2])
+    box[:, 1::2] = np.where(has, np.minimum(box[:, 1::2], rb), box[:, 1::2])
+    return to_mutable(doc, keep, w_ok, box, types)
+
+
+def clean_doc(doc: Document, conf: int = 10) -> Document:
+    """The reference's cleaning pipeline in normative order
+    (``clean_ocr``, ``O/pipeline.py:708-819``): remove_nodes_conf →
+    remove_empty_boxes → delimiter typing → text_bound_box_fix →
+    split_whitespaces → delimiters_fix → block_bound_box_fix.  (The
+    image-space ``bound_box_fix_image`` stage is a no-op for HTML payloads.)
+
+    The first four rules treat each block on its own and run as
+    whole-document masks on ``doc`` (:func:`_masked_rules`); only the
+    surviving blocks and words become MBlocks, once.  The last three
+    depend on block order and run on the MBlocks."""
+    from .analyzer import average_word_distance
+
+    blocks = _masked_rules(doc, conf)
+    blocks = split_whitespaces(blocks, average_word_distance(doc, conf=conf), conf=conf)
     blocks = delimiters_fix(blocks, conf=conf)
     blocks = block_bound_box_fix(blocks, conf=conf)
     return to_document(blocks, doc.url)

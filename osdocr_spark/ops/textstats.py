@@ -587,13 +587,14 @@ SELECT d.doc_id,
        CASE WHEN d.doc_id % {WAV_CORRUPT_MOD} = 0 THEN 20
             ELSE {_WAV_HDR} + 2 * strlen(d.text) END AS n_bytes,
        CASE WHEN d.doc_id % {WAV_CORRUPT_MOD} = 0 THEN NULL
-            ELSE CAST(a.L AS BIGINT) END AS n_samples,
+            ELSE CAST(COALESCE(a.L, 0) AS BIGINT) END AS n_samples,
        CASE WHEN d.doc_id % {WAV_CORRUPT_MOD} = 0 THEN NULL
             ELSE {_WAV_RATE} END AS sample_rate,
        CASE WHEN d.doc_id % {WAV_CORRUPT_MOD} = 0 THEN NULL
+            WHEN COALESCE(a.L, 0) = 0 THEN 0.0
             ELSE sqrt(a.sq / a.L) END AS rms,
        d.doc_id % {WAV_CORRUPT_MOD} != 0 AS decode_ok
-FROM documents d JOIN agg a USING (doc_id)
+FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 

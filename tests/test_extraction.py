@@ -235,3 +235,22 @@ def test_adversarial_reading_order_goldens(docs):
             if vert or "caption" in types:
                 checked[4] += 1
     assert all(n > 0 for n in checked.values()), checked
+
+
+def test_crossed_pages_through_hocr_sink_with_fix_suite():
+    """Crossed pages (noisy × adversarial × multi-article) serialized by the
+    ``to_hocr`` sink and parsed back extract exactly like the direct path
+    with the fix suite on."""
+    from osdocr_spark.kernels.hocr import parse_hocr, to_hocr
+    from osdocr_spark.kernels.pipeline import clean_and_extract
+
+    rows = duckdb.sql("select doc_id, text from '/root/testdata/sf0.01/"
+                      "documents.parquet' order by doc_id limit 300").fetchall()
+    keys = ("text", "raw_text", "reading_order", "spans", "block_types")
+    for doc_id, text in rows:
+        page = generate_page(doc_id, text, noisy=True, adversarial=True,
+                             multi_article=True)
+        direct = clean_and_extract(parse_hocr(page, url=str(doc_id)), clean=True)
+        sunk = clean_and_extract(parse_hocr(to_hocr(parse_hocr(page)), url=str(doc_id)),
+                                 clean=True)
+        assert {k: sunk[k] for k in keys} == {k: direct[k] for k in keys}, doc_id

@@ -1,6 +1,8 @@
 """Unit + end-to-end tests for the §2.9 mutation/fix operators."""
 
+import os
 import re
+import sys
 
 import duckdb
 import numpy as np
@@ -8,11 +10,16 @@ import pytest
 
 from osdocr_spark.kernels import fix as FX
 from osdocr_spark.kernels.corpus import generate_page
+from osdocr_spark.kernels.doc import Document
 from osdocr_spark.kernels.fix import MBlock, MWord
 from osdocr_spark.kernels.hocr import parse_hocr
 from osdocr_spark.kernels.pipeline import extract_document, extract_html
 
+sys.path.insert(0, os.path.dirname(__file__))
+import fix_oracle as FO  # noqa: E402
+
 SF = "/root/testdata/sf0.001"
+SF2 = "/root/testdata/sf0.01"
 
 
 def W(text, l, t, w=40, h=20, conf=95, par=0, line=0):
@@ -24,22 +31,149 @@ def B(bid, box, words=None, type=None):
 
 
 def test_remove_nodes_conf_and_empty_boxes():
-    blocks = [
-        B(0, (0, 100, 0, 20), [W("keep", 0, 0), W("drop", 50, 0, conf=5)]),
-        B(1, (0, 400, 40, 45)),                     # thin empty → delimiter kept
-        B(2, (10, 60, 100, 140)),                   # empty non-delimiter → dropped
-        B(3, (0, 1000, 0, 900)),                    # empty >80% page → dropped
-    ]
-    blocks = FX.remove_nodes_conf(blocks, conf=10)
+    def page():
+        return [
+            B(0, (0, 100, 0, 20), [W("keep", 0, 0), W("drop", 50, 0, conf=5)]),
+            B(1, (0, 400, 40, 45)),                     # thin empty → delimiter kept
+            B(2, (10, 60, 100, 140)),                   # empty non-delimiter → dropped
+            B(3, (0, 1000, 0, 900)),                    # empty >80% page → dropped
+        ]
+    blocks = FO.remove_nodes_conf(page(), conf=10)
     assert [w.text for w in blocks[0].words] == ["keep"]
-    out = FX.remove_empty_boxes(blocks, [0, 1000, 0, 1000], conf=10)
+    out = FO.remove_empty_boxes(blocks, [0, 1000, 0, 1000], conf=10)
     assert [b.id for b in out] == [0, 1]
+    # the production masks on the same page as a Document (page box from
+    # its blocks: [0, 1000, 0, 900], so block 3 still covers ≥80%)
+    got = FX._masked_rules(FX.to_document(page(), "p"), 10)
+    assert [b.id for b in got] == [0, 1]
+    assert [w.text for w in got[0].words] == ["keep"]
+    assert [b.type for b in got] == [None, "delimiter"]
+    assert FO.snap(got) == FO.snap(FO.prefix(FX.to_document(page(), "p"), 10))
 
 
 def test_text_bound_box_fix_shrinks_to_hull():
-    b = B(0, (0, 500, 0, 300), [W("a", 20, 30), W("b", 100, 30)])
-    FX.text_bound_box_fix([b])
+    def page():
+        return [B(0, (0, 500, 0, 300), [W("a", 20, 30), W("b", 100, 30)])]
+    b = page()[0]
+    FO.text_bound_box_fix([b])
     assert b.box == [20, 140, 30, 50]
+    got = FX._masked_rules(FX.to_document(page(), "p"), 10)
+    assert [g.box for g in got] == [[20, 140, 30, 50]]
+
+
+def _doc_of(blocks, url="edge", order=None):
+    """A Document from MBlocks; ``order`` permutes its word rows (so
+    ``w_block`` need not be sorted) while each block keeps its words'
+    relative order."""
+    d = FX.to_document(blocks, url)
+    if order is None:
+        return d
+    p = np.asarray(order, np.int64)
+    return Document(url=url, w_box=d.w_box[p], w_conf=d.w_conf[p],
+                    w_text=d.w_text[p], w_block=d.w_block[p], w_par=d.w_par[p],
+                    w_line=d.w_line[p], w_link=d.w_link[p], b_box=d.b_box,
+                    b_id=d.b_id, b_type=d.b_type)
+
+
+def _assert_clean_parity(doc, where):
+    """Production prefix and clean_doc equal the MBlock oracle's."""
+    assert FO.snap(FX._masked_rules(doc, 10)) == FO.snap(FO.prefix(doc, 10)), where
+    assert FO.doc_diff(FX.clean_doc(doc), FO.clean_doc(doc)) == [], where
+
+
+def _edge_pages():
+    text = [W("alpha", 20, 30), W("beta", 70, 30), W("gamma", 20, 60, line=1)]
+    return {
+        "image-typed empty": [B(0, (0, 300, 0, 100), list(text)),
+                              B(1, (10, 90, 200, 290), type="image"),
+                              B(2, (10, 400, 300, 310), type="image")],
+        "typed delimiter": [B(0, (0, 300, 0, 100), list(text)),
+                            B(1, (10, 60, 200, 250), type="delimiter"),
+                            B(2, (0, 300, 260, 380), [W("w", 5, 270)], type="delimiter")],
+        "empty box over 80% of the page": [
+            B(0, (0, 300, 0, 100), list(text)), B(1, (0, 1000, 0, 1000)),
+            B(2, (0, 1000, 0, 990), type="delimiter"), B(3, (5, 900, 0, 5))],
+        # exactly 80% goes, just under stays (page box from the blocks)
+        "empty box at 80% of the page": [
+            B(0, (0, 1000, 0, 1000), list(text)),
+            B(1, (0, 1000, 0, 800), type="delimiter"),
+            B(2, (0, 999, 0, 800), type="delimiter")],
+        "all words below conf": [
+            B(0, (0, 300, 0, 100), list(text)),
+            B(1, (0, 300, 200, 240), [W("low", 10, 210, conf=3), W("er", 60, 210, conf=9)]),
+            B(2, (0, 400, 300, 310), [W("thin", 10, 300, conf=2)])],
+        "whitespace and punctuation words": [
+            B(0, (0, 300, 0, 100), list(text) + [W("  ", 250, 30), W("", 250, 80, line=1)]),
+            B(1, (0, 300, 150, 200), [W("---", 40, 160), W(" ", 280, 180)]),
+            B(2, (0, 600, 220, 240), [W("...", 100, 220, w=20, h=10)]),
+            B(3, (0, 300, 300, 350), [W(" ", 10, 310), W("\t", 100, 310)])],
+        "zero words": [B(0, (0, 300, 0, 100)), B(1, (0, 400, 200, 210)),
+                       B(2, (0, 50, 300, 350), type="text")],
+        "zero blocks": [],
+        "inverted bbox": [
+            B(0, (0, 300, 0, 100), list(text)),
+            B(1, (300, 0, 150, 250), [W("back", 200, 160)]),
+            B(2, (50, 60, 400, 300)),
+            B(3, (0, 200, 500, 560), [MWord([120, 40, 520, 500], 95, "flip", 0, 0)])],
+    }
+
+
+def test_masked_rules_match_oracle_on_edge_pages():
+    pages = _edge_pages()
+    for name, blocks in pages.items():
+        _assert_clean_parity(_doc_of(blocks), name)
+    kept = FX._masked_rules(_doc_of(pages["empty box at 80% of the page"]), 10)
+    assert [b.id for b in kept] == [0, 2]
+    # unsorted w_block: blocks' words interleaved, in-block order kept
+    blocks = _edge_pages()["whitespace and punctuation words"]
+    d = _doc_of(blocks)
+    rank = np.zeros(len(d.w_block), np.int64)
+    for bi in range(d.n_blocks()):
+        rank[d.words_of(bi)] = np.arange(len(d.words_of(bi)))
+    order = np.lexsort((-d.w_block, rank))
+    doc = _doc_of(blocks, order=order)
+    assert not (doc.w_block[1:] >= doc.w_block[:-1]).all()
+    _assert_clean_parity(doc, "unsorted w_block")
+    got = FX._masked_rules(doc, 10)
+    assert FO.snap(got) == FO.snap(FX._masked_rules(d, 10))
+
+
+def test_clean_doc_reads_one_statistic_and_converts_once(monkeypatch):
+    from osdocr_spark.kernels import analyzer
+
+    calls = []
+    real = FX.to_mutable
+
+    def counted(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    def refuse(*a, **k):
+        raise AssertionError("clean_doc ran the full analysis")
+
+    monkeypatch.setattr(analyzer, "analyze_text", refuse)
+    monkeypatch.setattr(FX, "to_mutable", counted)
+    doc = parse_hocr(generate_page(7, "alpha beta gamma delta " * 20, noisy=True), url="x")
+    FX.clean_doc(doc)
+    assert len(calls) == 1
+
+
+@pytest.mark.parametrize("family,kw", [
+    ("noisy", dict(noisy=True)),
+    ("adversarial", dict(adversarial=True)),
+    ("adversarial+noisy", dict(adversarial=True, noisy=True)),
+    ("crossed", dict(adversarial=True, noisy=True, multi_article=True)),
+])
+def test_clean_doc_matches_oracle(family, kw):
+    """Production clean_doc (mask prefix, one conversion, the single
+    statistic) equals the MBlock oracle sequence on every Document column,
+    over 300 sf0.01 pages per family."""
+    rows = duckdb.sql(f"select doc_id, text from '{SF2}/documents.parquet' "
+                      "order by doc_id limit 300").fetchall()
+    assert len(rows) == 300
+    for doc_id, text in rows:
+        doc = parse_hocr(generate_page(doc_id, text, **kw), url=str(doc_id))
+        assert FO.doc_diff(FX.clean_doc(doc), FO.clean_doc(doc)) == [], (family, doc_id)
 
 
 def test_block_bound_box_fix_merges_and_shrinks():

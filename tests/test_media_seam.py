@@ -205,3 +205,32 @@ def test_wav_meta_stage_end_to_end(spark):
     assert all(r.doc_id % WAV_CORRUPT_MOD != 0 for r in good)
     assert all(r.sample_rate == 8000 and r.n_samples > 0 and r.rms > 0
                for r in good)
+
+
+def test_wav_meta_empty_text_row_matches_oracle(spark, tmp_path):
+    """A document with empty text still decodes (a header-only WAV:
+    ``n_samples`` 0, ``rms`` 0.0), so the oracle must keep its row too —
+    and a corrupt empty-text row keeps its NULL features."""
+    import duckdb
+
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from harness import compare
+    from osdocr_spark.ops.textstats import ORACLES, WAV_CORRUPT_MOD, m_wav_meta
+
+    assert WAV_CORRUPT_MOD == 37
+    path = tmp_path / "documents.parquet"
+    duckdb.sql(
+        f"copy (select * from '{SF}/documents.parquet' where doc_id < 40 "
+        "union all select 1001, '', 'en', 'empty', 0 "
+        "union all select 1036, '', 'en', 'empty', 0) "
+        f"to '{path}' (format parquet)")
+    con = duckdb.connect()
+    con.execute(f"create view documents as select * from '{path}'")
+    want = con.execute(ORACLES["m_wav_meta"]).df()
+    got = m_wav_meta(spark, str(tmp_path))
+    res = compare(got, want)
+    assert res["count_match"] and res["cols_match"] and res["values_match"], res
+    rows = {r["doc_id"]: r for r in want.to_dict("records")}
+    assert rows[1001]["n_samples"] == 0 and rows[1001]["rms"] == 0.0
+    assert rows[1001]["decode_ok"] and rows[1001]["n_bytes"] == 44
+    assert not rows[1036]["decode_ok"]
